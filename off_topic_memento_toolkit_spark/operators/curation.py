@@ -186,27 +186,11 @@ def with_global_position(df: DataFrame, order_cols,
     The order must be unique (here (memento_datetime, urim) — urim breaks
     ties), which makes the rank independent of range boundary placement.
 
-    Mode gate (``spark.otmt.ranking.mode``, default ``distributed``): small
-    collections can set ``single`` to take a plain single-partition
-    ``row_number()`` window instead — no range exchange, no persist pin, no
-    broadcast join, ~2x faster below ~10^5 rows (measured; BENCH.md
-    curation A/B) but an Exchange SinglePartition of the DATA, which is
-    exactly what must never happen at corpus scale.  The default stays the
-    distributed plan; the gate exists for interactive small-collection use
-    and for the A/B harness (scripts/curation_ab.py)."""
+    This is the only ranking plan: a single-partition ``row_number()``
+    window is faster below ~10^5 rows but moves the DATA through an
+    Exchange SinglePartition (BENCH.md curation A/B; the harness is
+    ``git show 72f2802:scripts/curation_ab.py``)."""
     from pyspark.storagelevel import StorageLevel
-
-    mode = df.sparkSession.conf.get("spark.otmt.ranking.mode", "distributed")
-    if mode == "single":
-        w = Window.orderBy(*order_cols)
-        out = df.withColumn(pos_col, F.row_number().over(w) - 1)
-        if total_col:
-            out = out.withColumn(
-                total_col,
-                F.count("*").over(
-                    w.rowsBetween(Window.unboundedPreceding,
-                                  Window.unboundedFollowing)))
-        return out
 
     n_parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions"))

@@ -39,6 +39,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # 6+ digits: the formatter zero-pads to 6 but emits wider past v999999 —
 # the parser must accept any width the formatter can produce
@@ -79,14 +80,20 @@ def _per_partition_counts(persisted: DataFrame, key: str = "_partition_id") -> l
 
 
 def _build_marker(stage: str, run_id: str, version, data_path: str,
-                  per_partition: list, bucket_by: list | None = None,
+                  per_partition: list, schema: StructType,
+                  bucket_by: list | None = None,
                   num_buckets: int | None = None) -> dict:
-    """One marker schema for every backend — evolve it here, not per-store."""
+    """One marker schema for every backend — evolve it here, not per-store.
+
+    ``schema`` is the committed table's schema (lineage columns included):
+    readers take it from the marker instead of inferring it from the files,
+    because an EMPTY bucketed stage has no data file to infer from."""
     marker = {
         "stage": stage,
         "run_id": run_id,
         "version": version,
         "data_path": data_path,
+        "schema": schema.jsonValue(),
         "rows": sum(p["rows"] for p in per_partition),
         "partitions": len(per_partition),
         "per_partition_rows": sorted(per_partition,
@@ -132,6 +139,14 @@ class CheckpointStore:
                 out.append(int(match.group(1)))
         return sorted(out)
 
+    def _read_version(self, path: str, schema: dict | None) -> DataFrame:
+        """A version directory read with its recorded schema (a marker
+        from before schemas were recorded: inferred from the files)."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
+
     def _next_version(self, stage: str) -> int:
         stage_dir = self._stage_dir(stage)
         existing = [0]
@@ -164,11 +179,12 @@ class CheckpointStore:
         else:
             lineaged.write.mode("errorifexists").parquet(path)
 
-        persisted = self.spark.read.parquet(path)
+        persisted = self._read_version(path, lineaged.schema.jsonValue())
         per_partition = _per_partition_counts(
             persisted, key=BUCKET_COL if bucket_by else "_partition_id")
         marker = _build_marker(stage, self.run_id, version, path,
-                               per_partition, bucket_by=bucket_by,
+                               per_partition, persisted.schema,
+                               bucket_by=bucket_by,
                                num_buckets=num_buckets if bucket_by else None)
         self._commit(stage, path, marker)
         return persisted.drop(*_LINEAGE_COLS)
@@ -255,11 +271,11 @@ class CheckpointStore:
                         os.path.join(dst_dir, name))
 
         # 2) rewrite only the touched buckets (partition-pruned scan)
-        data_cols = [c for c in self.spark.read.parquet(prev_path).columns
-                     if c not in _LINEAGE_COLS]
+        prev = self._read_version(prev_path, marker.get("schema"))
+        data_cols = [c for c in prev.columns if c not in _LINEAGE_COLS]
         if touched:
             prev_touched = (
-                self.spark.read.parquet(prev_path)
+                prev
                 .filter(F.col(BUCKET_COL).isin(*touched))
                 .select(*data_cols)
             )
@@ -284,7 +300,7 @@ class CheckpointStore:
                 .write.mode("append").partitionBy(BUCKET_COL).parquet(path)
 
         # 3) counters: fresh for rewritten buckets, carried for the rest
-        persisted = self.spark.read.parquet(path)
+        persisted = self._read_version(path, marker.get("schema"))
         carried = [p for p in marker["per_partition_rows"]
                    if p["partition_id"] not in touched]
         fresh = []
@@ -293,7 +309,8 @@ class CheckpointStore:
                 persisted.filter(F.col(BUCKET_COL).isin(*touched)),
                 key=BUCKET_COL)
         new_marker = _build_marker(stage, self.run_id, version, path,
-                                   carried + fresh, bucket_by=bucket_by,
+                                   carried + fresh, prev.schema,
+                                   bucket_by=bucket_by,
                                    num_buckets=num_buckets)
         self._commit(stage, path, new_marker)
         return persisted.drop(*_LINEAGE_COLS)
@@ -314,13 +331,14 @@ class CheckpointStore:
                     self.spark.read.parquet(self._stage_dir(stage))
                     .drop(*_LINEAGE_COLS)
                 )
-            path = self._version_dir(stage, version)
-        else:
-            path = self._version_dir(stage, version)
-            if not os.path.exists(os.path.join(path, "_info.json")):
-                raise FileNotFoundError(
-                    f"stage {stage!r} has no committed version {version}")
-        return self.spark.read.parquet(path).drop(*_LINEAGE_COLS)
+        path = self._version_dir(stage, version)
+        info = os.path.join(path, "_info.json")
+        if not os.path.exists(info):
+            raise FileNotFoundError(
+                f"stage {stage!r} has no committed version {version}")
+        with open(info) as fh:
+            schema = json.load(fh).get("schema")
+        return self._read_version(path, schema).drop(*_LINEAGE_COLS)
 
     def marker(self, stage: str) -> dict:
         with open(self._marker(stage)) as fh:
@@ -467,7 +485,8 @@ class IcebergCheckpointStore:
         per_partition = _per_partition_counts(persisted)
         marker = _build_marker(stage, self.run_id,
                                self._current_snapshot(stage), table,
-                               per_partition, bucket_by=bucket_by,
+                               per_partition, persisted.schema,
+                               bucket_by=bucket_by,
                                num_buckets=num_buckets if bucket_by else None)
         self._commit_marker(stage, marker)
         return persisted.drop("_partition_id", "_run_id", "_stage")
@@ -539,7 +558,8 @@ class IcebergCheckpointStore:
         per_partition = _per_partition_counts(persisted)
         new_marker = _build_marker(
             stage, self.run_id, self._current_snapshot(stage), table,
-            per_partition, bucket_by=marker.get("bucket_by"),
+            per_partition, persisted.schema,
+            bucket_by=marker.get("bucket_by"),
             num_buckets=marker.get("num_buckets"))
         self._commit_marker(stage, new_marker)
         return persisted.drop("_partition_id", "_run_id", "_stage")

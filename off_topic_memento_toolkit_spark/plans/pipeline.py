@@ -191,28 +191,18 @@ def dedup_pipeline(
         if verify and verify_method == "lcs":
             pin_cols.insert(2, "text")
         docs = pin_for_session(docs.select(*pin_cols))
-        # Materialize the pin NOW when the corpus is big enough: the cache
-        # has two consumers whose shuffle map stages AQE submits
-        # CONCURRENTLY (the minhash-band exchange and the simhash-chunk
-        # exchange), and concurrent first readers of an unfilled cache each
-        # compute the partitions themselves — the whole extract/tokenize/
-        # simhash enrichment ran twice in parallel (event log: two
-        # identical 32-task stages, 2×2.1 s at sf1).  The duplicated work
-        # grows with the corpus while the eager fill costs one ~fixed
-        # sequential job, so the fill is gated on the optimizer's input
-        # size estimate (the crossover was measured between sf0.1 — docs
-        # estimate 0.6 MiB, racing stages overlap on idle cores and the
-        # fill's serialization costs more than the duplication — and sf1 —
-        # 5.7 MiB, duplication 2×2.1 s vs 1.8 s fill).  (The measures pin
-        # needs no fill: its branches are separated by an exchange
-        # barrier, so the first reader always finishes before the second
-        # starts.)
-        min_fill = int(pages.sparkSession.conf.get(
-            "spark.otmt.dedup.eagerFillMinBytes", str(2 * 1024 * 1024)))
-        est = int(str(docs._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes()))
-        if est >= min_fill:
-            docs.count()
+        # Fill the pin NOW, as the store path writes its docs stage before
+        # anything reads it: the cache has two consumers whose shuffle map
+        # stages AQE submits CONCURRENTLY (the minhash-band exchange and
+        # the simhash-chunk exchange), and concurrent first readers of an
+        # unfilled cache each compute the partitions themselves — the whole
+        # extract/tokenize/simhash enrichment would run twice in parallel.
+        # The fill is one sequential job (OPTIMIZATION_r06.md "Cache-fill
+        # race" has the sf0.1/sf1 readings; perfbench/README.md "Per-layer
+        # metrics" times the stages).  (The measures pin needs no fill: its
+        # branches are separated by an exchange barrier, so the first
+        # reader always finishes before the second starts.)
+        docs.count()
 
     def build_bands():
         # checkpointed as its OWN stage: the band table is the corpus state

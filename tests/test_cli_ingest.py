@@ -63,6 +63,49 @@ def test_cli_ingest_end_to_end(spark, tmp_path):
     assert got2 == want2
 
 
+def _distinct_pages(spark, prefix, n):
+    """Pages whose texts share no word: no candidate survives verify."""
+    from datetime import datetime
+
+    rows = [
+        (f"http://nodup.example/{prefix}{i}", datetime(2024, 1, 1, i),
+         ("<html><body><p>" + " ".join(
+             f"{prefix}{i}w{j}" for j in range(60)) + "</p></body></html>"
+          ).encode(), None, "en")
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, "
+              "lang string")
+
+
+def test_cli_dedup_and_promote_without_near_dup_pairs(spark, tmp_path):
+    """A checkpointed dedup batch with no near-dup pair commits every stage
+    (verified_edges with 0 rows), and an ingest --promote on top works."""
+    base_src = str(tmp_path / "base_pages")
+    inc_src = str(tmp_path / "inc_pages")
+    _distinct_pages(spark, "a", 8).write.parquet(base_src)
+    _distinct_pages(spark, "b", 4).write.parquet(inc_src)
+    ck = str(tmp_path / "ck")
+    main(["dedup", "-i", f"pages:{base_src}", "-o", str(tmp_path / "c"),
+          "--checkpoint-dir", ck], spark=spark)
+    store = CheckpointStore(spark, ck)
+    for stage in ("docs", "bands", "candidate_edges", "verified_edges",
+                  "clusters"):
+        assert store.is_committed(stage), stage
+    assert store.marker("verified_edges")["rows"] == 0
+    assert store.marker("clusters")["rows"] == 8
+
+    out = str(tmp_path / "merged")
+    main(["ingest", "-i", f"pages:{inc_src}", "--base-checkpoint-dir", ck,
+          "-o", out, "--promote"], spark=spark)
+    merged = _clusters(spark.read.parquet(out))
+    assert len(merged) == 12 and len(set(merged.values())) == 12
+    assert store.versions("clusters") == [1, 2]
+    assert store.marker("clusters")["rows"] == 12
+    assert store.read("verified_edges").count() == 0
+
+
 def test_cli_takedown_end_to_end(spark, tmp_path):
     """Two chained takedowns with --promote: each equals a from-scratch
     dedup over the surviving pages (cap never crossed at this SF), and the

@@ -342,10 +342,12 @@ def test_ranking_pins_scope_owner_release(spark):
     assert not _ACTIVE_PIN_SCOPES and not _PERSISTED_RANGED
 
 
-def test_ranking_mode_single_equals_distributed(spark):
-    """The spark.otmt.ranking.mode=single fast path (one row_number window,
-    small-scale interactive gate) produces exactly the distributed two-phase
-    ranking's positions and total column."""
+def test_global_position_equals_row_number_oracle(spark):
+    """The distributed two-phase ranking gives exactly a single-window
+    ``row_number()`` rendition's 0-based positions, and ``total_col``
+    carries count(*) on every row, over an adversarial input layout; the
+    data is range-partitioned, never funnelled through one partition."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from off_topic_memento_toolkit_spark.operators.curation import (
@@ -353,17 +355,17 @@ def test_ranking_mode_single_equals_distributed(spark):
     )
 
     df = spark.range(500).select(
-        F.format_string("k%04d", (F.col("id") * 73) % 500).alias("k"))
-    want = {(r.k, r.pos, r.n) for r in with_global_position(
-        df, ["k"], pos_col="pos", total_col="n").collect()}
-    spark.conf.set("spark.otmt.ranking.mode", "single")
-    try:
-        got_df = with_global_position(df, ["k"], pos_col="pos",
-                                      total_col="n")
-        got = {(r.k, r.pos, r.n) for r in got_df.collect()}
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.otmt.ranking.mode")
+        F.format_string("k%04d", (F.col("id") * 73) % 500).alias("k")
+    ).repartition(13)  # adversarial input layout
+    out = with_global_position(df, ["k"], pos_col="pos", total_col="n")
+    got = {(r.k, r.pos, r.n) for r in out.collect()}
+
+    # brute-force oracle: literal single-window arithmetic (test-only)
+    w = Window.orderBy("k")
+    brute = df.withColumn("_i", F.row_number().over(w) - 1)
+    want = {(r.k, r._i, 500) for r in brute.collect()}
     assert got == want and len(got) == 500
-    # and it is genuinely the one-window plan: no range exchange
-    assert "rangepartitioning" not in plan.lower()
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" in plan.lower()
+    assert "Exchange SinglePartition" not in plan, plan

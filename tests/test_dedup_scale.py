@@ -19,6 +19,8 @@ from off_topic_memento_toolkit_spark.operators.verify import (
     verified_pairs_jaccard,
 )
 
+SF_DIR = "/root/testdata/sf0.001"
+
 
 def _union_find_components(n, edges):
     parent = list(range(n))
@@ -484,3 +486,77 @@ def test_connected_components_exhaustion_raises(spark):
     # enough rounds: one component labeled by its min
     ok = connected_components(chain, small_graph_threshold=0)
     assert {r.component for r in ok.collect()} == {0}
+
+
+def _fully_cached(spark, df):
+    """True when every partition of ``df``'s cache is stored, read from the
+    persistent-RDD storage info of the SparkContext."""
+    cached = spark._jsparkSession.sharedState().cacheManager() \
+        .lookupCachedData(df._jdf)
+    assert cached.isDefined(), "frame is not persisted"
+    rdd_id = cached.get().cachedRepresentation().cacheBuilder() \
+        .cachedColumnBuffers().id()
+    sc = spark.sparkContext._jsc.sc()
+    assert sc.getPersistentRDDs().contains(rdd_id)
+    info = [i for i in sc.getRDDStorageInfo() if i.id() == rdd_id]
+    return bool(info) and \
+        info[0].numCachedPartitions() == info[0].numPartitions()
+
+
+def test_storeless_dedup_fills_docs_pin(spark, monkeypatch):
+    """The storeless pipeline fills its docs pin before any consumer runs
+    (the store path writes its docs stage first, too): the pin is fully
+    cached by the time the CC stage starts — the first job a consumer
+    submits — and still is once dedup_pipeline returns."""
+    from off_topic_memento_toolkit_spark import session
+    from off_topic_memento_toolkit_spark.plans import pipeline
+    from off_topic_memento_toolkit_spark.queries import pages_from_documents
+
+    def docs_pin():
+        pins = [df for df in session._SESSION_PINS
+                if "raw_simhash" in df.columns]
+        assert len(pins) == 1
+        return pins[0]
+
+    filled_at_cc = []
+    real_attach = pipeline.attach_components
+
+    def spying_attach(*args, **kwargs):
+        filled_at_cc.append(_fully_cached(spark, docs_pin()))
+        return real_attach(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "attach_components", spying_attach)
+    session.release_session_pins()
+    try:
+        pipeline.dedup_pipeline(
+            pages_from_documents(spark, SF_DIR))
+        assert filled_at_cc == [True]
+        assert _fully_cached(spark, docs_pin())
+    finally:
+        session.release_session_pins()
+
+
+def test_storeless_dedup_clusters_equal_store_path(spark, tmp_path):
+    """Same input, same urim grouping with and without a checkpoint store."""
+    from off_topic_memento_toolkit_spark.plans.checkpoints import (
+        CheckpointStore,
+    )
+    from off_topic_memento_toolkit_spark.plans.pipeline import dedup_pipeline
+    from off_topic_memento_toolkit_spark.queries import pages_from_documents
+    from off_topic_memento_toolkit_spark.session import release_session_pins
+
+    def grouping(clusters):
+        groups = {}
+        for r in clusters.collect():
+            groups.setdefault(r.component, set()).add(r.urim)
+        return {frozenset(g) for g in groups.values()}
+
+    pages = pages_from_documents(spark, SF_DIR)
+    try:
+        storeless = grouping(dedup_pipeline(pages))
+    finally:
+        release_session_pins()
+    stored = grouping(dedup_pipeline(
+        pages, store=CheckpointStore(spark, str(tmp_path / "ck"))))
+    assert storeless == stored
+    assert sum(len(g) for g in stored) == pages.count()

@@ -161,6 +161,35 @@ def test_merge_empty_changes_is_metadata_only_version(spark, tmp_path):
     assert store.marker("t")["rows"] == 12
 
 
+def test_empty_bucketed_stage_write_read_merge(spark, tmp_path):
+    """An empty bucketed stage has no data file to infer a schema from (a
+    dedup batch with no near-dup pair commits an empty verified_edges):
+    it is written, read back, time-travelled and merged into with the
+    schema its marker records."""
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    out = store.write(empty, "verified_edges", bucket_by=["id_a"],
+                      num_buckets=4)
+    assert out.dtypes == empty.dtypes and out.count() == 0
+    marker = store.marker("verified_edges")
+    assert marker["rows"] == 0 and marker["partitions"] == 0
+    assert store.read("verified_edges").dtypes == empty.dtypes
+
+    # an empty merge into the empty stage commits a version with no files
+    store.merge("verified_edges", changes=empty)
+    assert store.read("verified_edges").dtypes == empty.dtypes
+    assert store.read("verified_edges").count() == 0
+
+    changes = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    merged = store.merge("verified_edges", changes=changes)
+    assert _rows(merged) == {(1, 2), (3, 4)}
+    assert _rows(store.read("verified_edges")) == {(1, 2), (3, 4)}
+    assert store.marker("verified_edges")["rows"] == 2
+    assert store.versions("verified_edges") == [1, 2, 3]
+    first = store.read("verified_edges", version=1)
+    assert first.dtypes == empty.dtypes and first.count() == 0
+
+
 def test_merge_then_expire_keeps_current_readable(spark, tmp_path):
     """expire_snapshots after a merge removes v1; v2's hardlinked files
     survive the rmtree (link count drops, inode lives)."""

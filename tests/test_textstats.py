@@ -197,6 +197,45 @@ def test_ivf_topk_recall(spark, embeddings):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
+def _arrow_evals_per_join_side(df):
+    """ArrowEvalPython count under each child of the plan's first join."""
+    def children(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def count(node):
+        return ("ArrowEvalPython" in node.nodeName()) + sum(
+            count(c) for c in children(node))
+
+    def find_join(node):
+        if "Join" in node.nodeName():
+            return node
+        return next((j for j in map(find_join, children(node)) if j), None)
+
+    join = find_join(df._jdf.queryExecution().sparkPlan())
+    assert join is not None
+    return [count(side) for side in children(join)]
+
+
+def test_ann_bucket_joins_evaluate_each_udf_once_per_side(spark, embeddings):
+    """The bucket UDFs are declared nondeterministic as a planner hint: a
+    deterministic one lets the join's inferred isnotnull(bucket) filter
+    push below the projection and evaluate the UDF a second time on a side.
+    Pin one ArrowEvalPython per join side so a Spark upgrade that plans the
+    hint differently is caught."""
+    from off_topic_memento_toolkit_spark.operators.ann import (
+        ivf_cosine_topk,
+        train_ivf_centroids,
+    )
+
+    queries = embeddings.filter(F.col("vec_id") < 4)
+    lsh = lsh_cosine_topk(embeddings, queries, k=3, dim=8, n_planes=4)
+    assert _arrow_evals_per_join_side(lsh) == [1, 1]
+    centroids = train_ivf_centroids(embeddings, n_centroids=8, dim=8, seed=7)
+    ivf = ivf_cosine_topk(embeddings, queries, centroids, k=3, nprobe=4)
+    assert _arrow_evals_per_join_side(ivf) == [1, 1]
+
+
 def test_exact_duplicates_keeps_null_keys(spark):
     # review finding: the groupBy+join rewrite must not drop NULL-key rows
     rows = [(0, "a"), (1, None), (2, None), (3, "a")]
